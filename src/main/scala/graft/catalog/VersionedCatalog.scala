@@ -437,10 +437,12 @@ final class VersionedCatalog(
     * (row-wise, so updates may legitimately null a column), unmatched
     * update rows insert, unmatched base rows carry over. Commits as the
     * next version; old versions stay readable (time travel = CDC audit).
-    * One co-partitioned shuffle join; both sides exchange on `keys`. */
+    * One co-partitioned shuffle join; both sides exchange on `keys`.
+    * `epochTag` commits with the version, as in [[writeNext]]. */
   def merge(
       step: String, updates: org.apache.spark.sql.DataFrame,
-      keys: Seq[String], schema: Option[StructType] = None): Int = {
+      keys: Seq[String], schema: Option[StructType] = None,
+      epochTag: Option[Long] = None): Int = {
     import org.apache.spark.sql.functions.{coalesce, col, struct}
     val base = latest(step, schema)
     val cols = base.columns.toSeq
@@ -465,7 +467,7 @@ final class VersionedCatalog(
     val merged = b.join(u, keys, "full_outer")
       .select(coalesce(col("_u"), col("_b")).as("_r"))
       .select("_r.*")
-    writeNext(step, merged)
+    writeNext(step, merged, epochTag = epochTag)
   }
 
   /** CDC read between two committed versions — the query-side
@@ -504,13 +506,14 @@ final class VersionedCatalog(
     * (a streaming epoch sink commits many small versions whose files are
     * sized by epoch, not by read efficiency).
     *
-    * The source version's EPOCH TAG carries forward: a compaction that
-    * dropped it would reopen the sketch sinks' replay window (the fold
-    * guard reads the LATEST version's tag — an interleaved compaction
-    * between a fold and the stream's checkpoint commit would otherwise
-    * make a replayed additive epoch look unfolded and double-add). Any
-    * future operation that rewrites the latest version must do the
-    * same. */
+    * The source version's EPOCH TAG carries forward. The streaming
+    * sinks' guard reads [[maxEpochTag]] over all retained versions, so
+    * the compacted version does not need it while the source is
+    * retained — but `vacuum` can drop the tagged source, and a
+    * compacted latest version without the tag would then make a
+    * replayed epoch look uncommitted (an additive fold would
+    * double-add). Any future operation that rewrites the latest
+    * version must do the same. */
   def compact(
       step: String, schema: Option[StructType] = None,
       targetBytes: Long = 128L << 20): Int = {
@@ -522,25 +525,8 @@ final class VersionedCatalog(
       epochTag = versionEpochTag(step, v))
   }
 
-  // Epoch markers for streaming sinks: `root/<step>/.epochs/e=N` records
-  // that stream epoch N's effects are committed. Written AFTER the data
-  // commit, so a failure in between replays the epoch — content-
-  // idempotent for merge (same rows replace themselves), at most one
-  // redundant version. The versions() listing ignores non-`v=` entries.
-  private def epochDir(step: String): Path = new Path(stepDir(step), ".epochs")
-
-  def epochCommitted(step: String, epoch: Long): Boolean =
-    fs.exists(new Path(epochDir(step), s"e=$epoch"))
-
-  def markEpochCommitted(step: String, epoch: Long): Unit = {
-    fs.mkdirs(epochDir(step))
-    fs.create(new Path(epochDir(step), s"e=$epoch"), true).close()
-  }
-
   /** The epoch tag a version was committed with ([[writeNext]]'s
-    * `epochTag`), if any — one directory listing, no data read. For a
-    * single-writer stream, epochs are monotone, so the LATEST version's
-    * tag answers "did epoch N already fold?" in O(1) listings. Foreign
+    * `epochTag`), if any — one directory listing, no data read. Foreign
     * files that merely share the `_epoch_` prefix (a stray marker, a
     * tool's leftovers) are ignored rather than fatal: only an all-digit
     * suffix that parses as int64 counts as a tag. */
@@ -553,17 +539,13 @@ final class VersionedCatalog(
         else None
       }.maxOption
 
-  /** [[versionEpochTag]] of the latest version, if any version exists. */
-  def latestEpochTag(step: String): Option[Long] =
-    latestVersion(step).flatMap(versionEpochTag(step, _))
-
-  /** The MAXIMUM epoch tag across ALL retained versions — the
-    * rewrite-robust form of [[latestEpochTag]]: an operation that
-    * rewrites the latest version WITHOUT carrying the tag forward (a
-    * manual republish, a future maintenance op — [[compact]] does carry
-    * it) hides the tag from the latest-version probe but not from this
-    * one, so a streaming fold guard keyed on it cannot be reopened by
-    * an untagged rewrite while the tagged version is retained. One
+  /** The MAXIMUM epoch tag across ALL retained versions — what the
+    * streaming sinks' exactly-once guard reads. Unlike the latest
+    * version's tag alone, it survives an operation that rewrites the
+    * latest version WITHOUT carrying the tag forward (a manual
+    * republish, a future maintenance op — [[compact]] does carry it)
+    * while the tagged version is retained; and unlike version
+    * arithmetic, it is blind to gaps in the version sequence. One
     * listing per retained version; retention bounds the cost. */
   def maxEpochTag(step: String): Option[Long] =
     versions(step).flatMap(versionEpochTag(step, _)).maxOption

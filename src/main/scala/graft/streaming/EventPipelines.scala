@@ -255,48 +255,74 @@ object EventPipelines {
     q
   }
 
+  /** The loop every catalog sink below runs on: an append-mode
+    * `foreachBatch` query over everything available now, checkpointed
+    * at `checkpoint`, run to termination. `f` gets each epoch's batch
+    * and id. Epoch ids continue across restarts, and an epoch whose
+    * offsets were logged but never committed (a crash inside `f`, or
+    * between `f` and the commit marker) replays under the SAME id —
+    * so every catalog write in `f` is guarded by [[committed]] and
+    * tagged with the epoch. */
+  private def eachEpoch(in: DataFrame, checkpoint: String)(
+      f: (DataFrame, Long) => Unit): Unit =
+    in.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(f)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** The exactly-once guard of every catalog sink: `epoch` is already
+    * committed to `step` iff some retained version carries an epoch tag
+    * ≥ it. Sinks commit through `writeNext(…, epochTag = Some(epoch))`
+    * (or `merge`'s same argument), which writes the tag INTO the staged
+    * directory before the promote rename, so "version published" and
+    * "epoch recorded" commit in one atomic operation and a crash cannot
+    * split them. Epochs of one stream are monotone, so "max tag ≥
+    * epoch" ⟺ "this epoch already committed".
+    *
+    * The max across ALL retained versions, never the latest version's
+    * tag and never version arithmetic: it stays true after a later
+    * operation rewrote the latest version without the tag (compact
+    * carries it; a manual republish might not), and version gaps
+    * (a compaction, a crash-orphaned claim) never read as replays. The
+    * replay window reopens only if every tagged version is vacuumed,
+    * and vacuum always keeps the newest. */
+  private def committed(
+      cat: graft.catalog.VersionedCatalog, step: String, epoch: Long): Boolean =
+    cat.maxEpochTag(step).exists(_ >= epoch)
+
   /** Streaming sink into the versioned catalog: every epoch commits as
-    * the next immutable version (version = batchId + 1, since epoch ids
-    * continue across restarts from the checkpoint). Exactly-once without
-    * transactions: if a failure lands between the catalog commit and the
-    * offset commit, the replayed epoch finds its version already present
-    * and skips — the idempotent-resume shape the reference gets from
+    * the next immutable version, tagged with its epoch id. Exactly-once
+    * without transactions: if a failure lands between the catalog commit
+    * and the offset commit, the replayed epoch finds its tag and skips —
+    * the idempotent-resume shape the reference gets from
     * LastSuccessfullyProcessedIndex (tools.go:676-806), carried to
     * versioned storage. Incremental ETL = this sink + time travel. */
   def runCatalogSink(
       out: DataFrame,
       checkpoint: String,
       cat: graft.catalog.VersionedCatalog,
-      step: String): Unit = {
-    val q = out.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val expected = id.toInt + 1
-        val next = cat.nextVersion(step)
-        if (next == expected) {
-          val v = cat.writeNext(step, batch)
-          require(v == expected, s"catalog sink: committed v$v, expected v$expected")
-        } else if (next < expected) {
-          // catalog is BEHIND the checkpoint (root wiped/moved, retention
-          // mishap): skipping would silently drop every future epoch —
-          // fail fast; the operator must reconcile checkpoint vs catalog
+      step: String): Unit =
+    eachEpoch(out, checkpoint) { (batch, epoch) =>
+      if (!committed(cat, step, epoch)) {
+        // catalog is BEHIND the checkpoint (root wiped/moved, retention
+        // mishap): skipping would silently drop every future epoch —
+        // fail fast; the operator must reconcile checkpoint vs catalog
+        if (epoch > 0 && !committed(cat, step, epoch - 1))
           throw new IllegalStateException(
-            s"catalog sink: step $step is at v${next - 1} but epoch $id expects " +
-              s"v$expected — catalog/checkpoint desync, refusing to drop data")
-        } // else next > expected: replay of a committed epoch — skip, idempotent
+            s"catalog sink: step $step holds no epoch ${epoch - 1} but epoch " +
+              s"$epoch arrived — catalog/checkpoint desync, refusing to drop data")
+        cat.writeNext(step, batch, epochTag = Some(epoch))
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** Streaming CDC upsert sink: every epoch MERGES into the catalog step
     * (row-wise upsert on `keys`) instead of appending — an incrementally
-    * maintained materialized table. Epoch markers make replays skip;
-    * a failure between merge-commit and marker replays one epoch, which
-    * is content-idempotent (the same rows replace themselves) and costs
-    * at most one redundant version. First epoch bootstraps the table.
+    * maintained materialized table. The first epoch bootstraps the
+    * table. Each commit carries its epoch tag, so a replayed epoch skips
+    * without a redundant version.
     *
     * Contract: each epoch must carry at most ONE row per key — reduce
     * upstream (e.g. max_by on an event-time column) if the source can
@@ -308,21 +334,14 @@ object EventPipelines {
       cat: graft.catalog.VersionedCatalog,
       step: String,
       keys: Seq[String],
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val q = out.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!cat.epochCommitted(step, id)) {
-          if (cat.latestVersion(step).isEmpty) cat.writeNext(step, batch)
-          else cat.merge(step, batch, keys, Some(schema))
-          cat.markEpochCommitted(step, id)
-        }
+      schema: org.apache.spark.sql.types.StructType): Unit =
+    eachEpoch(out, checkpoint) { (batch, epoch) =>
+      if (!committed(cat, step, epoch)) {
+        if (cat.latestVersion(step).isEmpty)
+          cat.writeNext(step, batch, epochTag = Some(epoch))
+        else cat.merge(step, batch, keys, Some(schema), epochTag = Some(epoch))
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** foreachBatch with per-batch retry against a user sink — ST3's
     * retry at epoch granularity; pair with an idempotent sink keyed on
@@ -367,17 +386,11 @@ object EventPipelines {
   /** Fold one stream epoch's PARTIAL sketch into the catalog-persisted
     * running sketch — cell-wise addition
     * ([[graft.ext.CountMin.mergeSketches]], the q104 operator),
-    * committed with the epoch id as an ATOMIC version tag
-    * (`VersionedCatalog.writeNext(epochTag)`): the tag rides inside the
-    * staged directory through the promote rename, so "version
-    * published" and "epoch recorded" cannot be split by a crash.
-    * Replay-idempotent BECAUSE of that atomicity: an additive fold is
-    * not content-idempotent (replaying a committed epoch would
-    * double-add its counts — unlike the upsert
-    * [[runCatalogMergeSink]], where a replayed merge rewrites the same
-    * rows), so the skip decision must be as durable as the version
-    * itself. Epochs are monotone for a single stream, so the LATEST
-    * version's tag answers "already folded?" in one listing. */
+    * committed with the epoch id as an atomic version tag
+    * ([[committed]]). Replay-idempotent BECAUSE of that atomicity: an
+    * additive fold is not content-idempotent (replaying a committed
+    * epoch would double-add its counts), so the skip decision must be
+    * as durable as the version itself. */
   private[streaming] def foldSketchEpoch(
       cat: graft.catalog.VersionedCatalog, step: String,
       epochCells: DataFrame, epoch: Long,
@@ -385,21 +398,10 @@ object EventPipelines {
     foldEpoch(cat, step, epochCells, epoch,
       graft.ext.CountMin.mergeSketches, boundedState = true, retain = retain)
 
-  /** The shared epoch-fold guard both sketch sinks instantiate: skip
-    * iff some RETAINED version already carries a tag ≥ this epoch, else
-    * merge-or-init and commit tagged. ONE copy of the skip/write
-    * logic, so the CMS and HLL sinks' crash semantics can never
-    * diverge — only the merge law differs.
-    *
-    * The guard reads `maxEpochTag` (max across retained versions), not
-    * the latest version's tag: epochs are monotone for a single stream,
-    * so "max tag ≥ epoch" ⟺ "this epoch's fold already committed" —
-    * and unlike a latest-only probe it stays true even if a later
-    * operation rewrote the latest version WITHOUT carrying the tag
-    * forward (compact does; a manual republish might not). The replay
-    * window only reopens if the tagged version itself is vacuumed,
-    * and an epoch old enough to be vacuumed is old enough to be past
-    * the stream's checkpointed replay horizon.
+  /** The shared epoch fold every fold-type sink instantiates: unless
+    * [[committed]], merge-or-init and commit tagged. ONE copy of the
+    * skip/write logic, so the sinks' crash semantics can never diverge
+    * — only the merge law differs.
     *
     * RETENTION (`retain = Some(k)`): after a fold commits version N,
     * vacuum every version ≤ N − k — for FOLD-type sinks each version
@@ -408,18 +410,17 @@ object EventPipelines {
     * forever (thousands/month at minutes-scale epochs). Append-type
     * sinks must NOT pass retain (their versions are the history).
     * Replay stays a no-op after a vacuum: the latest version always
-    * carries the latest epoch tag and epochs are monotone, so
-    * `maxEpochTag ≥ any replayed epoch` holds as long as ONE version
-    * survives — and vacuum always keeps ≥ 1. The vacuum runs only on
-    * the epoch that committed (inside the guard), so a replayed
-    * already-folded epoch cannot even re-trigger deletion. */
+    * carries the latest epoch tag, and vacuum always keeps ≥ 1. The
+    * vacuum runs only on the epoch that committed (inside the guard),
+    * so a replayed already-folded epoch cannot even re-trigger
+    * deletion. */
   private def foldEpoch(
       cat: graft.catalog.VersionedCatalog, step: String,
       epochDf: DataFrame, epoch: Long,
       merge: (DataFrame, DataFrame) => DataFrame,
       boundedState: Boolean = false,
-      retain: Option[Int] = None): Unit = {
-    if (!cat.maxEpochTag(step).exists(_ >= epoch)) {
+      retain: Option[Int] = None): Unit =
+    if (!committed(cat, step, epoch)) {
       val next = cat.latestVersion(step) match {
         case None => epochDf
         case Some(_) => merge(cat.latest(step), epochDf)
@@ -433,85 +434,48 @@ object EventPipelines {
       cat.writeNext(step, out, epochTag = Some(epoch))
       retain.foreach(k => cat.vacuum(step, k))
     }
-  }
-
-  /** The HLL twin of [[foldSketchEpoch]]: fold one epoch's register
-    * table into the catalog by register-wise MAX
-    * ([[graft.ext.Hll.mergeRegisters]]). MAX-merge is
-    * content-IDEMPOTENT (re-merging an already-folded sketch changes
-    * nothing), so unlike the additive CMS fold a replay could never
-    * corrupt counts — the atomic epoch tag here only prevents the
-    * redundant version. */
-  private[streaming] def foldRegisterEpoch(
-      cat: graft.catalog.VersionedCatalog, step: String,
-      epochRegs: DataFrame, epoch: Long,
-      retain: Option[Int] = None): Unit =
-    foldEpoch(cat, step, epochRegs, epoch, graft.ext.Hll.mergeRegisters,
-      boundedState = true, retain = retain)
 
   /** Streaming HLL → catalog: each epoch reduces to a complete
     * m-register table ([[graft.ext.Hll.registerCells]] — the exact
     * q107 register definition, so streamed state merges with
-    * document-built sketches) and folds in by MAX. Fixed m-row state
-    * over unbounded item cardinality; every version is a complete
-    * servable distinct-count sketch. */
+    * document-built sketches) and folds in by register-wise MAX
+    * ([[graft.ext.Hll.mergeRegisters]]). MAX-merge is
+    * content-IDEMPOTENT, so a replay could never corrupt counts — the
+    * epoch tag here only prevents the redundant version. Fixed m-row
+    * state over unbounded item cardinality; every version is a
+    * complete servable distinct-count sketch. */
   def runCatalogRegisterSink(
       items: DataFrame,
       item: org.apache.spark.sql.Column,
       checkpoint: String,
       cat: graft.catalog.VersionedCatalog,
       step: String,
-      retain: Option[Int] = None): Unit = {
-    val q = items.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        foldRegisterEpoch(cat, step,
-          graft.ext.Hll.registerCells(batch, item), id, retain)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** The histogram twin of [[foldSketchEpoch]]: fold one epoch's
-    * complete bin table into the catalog by bin-wise ADDITION
-    * ([[graft.ext.HistSketch.mergeBins]]). Additive like CMS — NOT
-    * content-idempotent — so the atomic epoch tag carries the
-    * exactly-once burden here exactly as it does for the count
-    * sketch. */
-  private[streaming] def foldHistogramEpoch(
-      cat: graft.catalog.VersionedCatalog, step: String,
-      epochBins: DataFrame, epoch: Long,
       retain: Option[Int] = None): Unit =
-    foldEpoch(cat, step, epochBins, epoch, graft.ext.HistSketch.mergeBins,
-      boundedState = true, retain = retain)
+    eachEpoch(items, checkpoint) { (batch, epoch) =>
+      foldEpoch(cat, step, graft.ext.Hll.registerCells(batch, item), epoch,
+        graft.ext.Hll.mergeRegisters, boundedState = true, retain = retain)
+    }
 
   /** Streaming histogram → catalog: each epoch reduces to a complete
     * B-bin table ([[graft.ext.HistSketch.binCells]] — the exact q112
     * bin definition, so streamed state merges with batch-built
-    * sketches) and folds in by bin-wise addition. Fixed B-row state
-    * over an unbounded value stream; every version is a complete
-    * servable quantile sketch (q113-style cumulative probes read
-    * `latest`). */
+    * sketches) and folds in by bin-wise ADDITION
+    * ([[graft.ext.HistSketch.mergeBins]]) — additive like CMS, NOT
+    * content-idempotent, so the epoch tag carries exactly-once. Fixed
+    * B-row state over an unbounded value stream; every version is a
+    * complete servable quantile sketch (q113-style cumulative probes
+    * read `latest`). */
   def runCatalogHistogramSink(
       rows: DataFrame,
       value: org.apache.spark.sql.Column,
       checkpoint: String,
       cat: graft.catalog.VersionedCatalog,
       step: String,
-      retain: Option[Int] = None): Unit = {
-    val q = rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        foldHistogramEpoch(cat, step,
-          graft.ext.HistSketch.binCells(batch, value), id, retain)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      retain: Option[Int] = None): Unit =
+    eachEpoch(rows, checkpoint) { (batch, epoch) =>
+      foldEpoch(cat, step, graft.ext.HistSketch.binCells(batch, value), epoch,
+        graft.ext.HistSketch.mergeBins, boundedState = true, retain = retain)
+    }
 
   /** Streaming sketch → catalog serving loop: each epoch reduces its
     * raw items to a PARTIAL D×W sketch ([[countMinCells]] applied to
@@ -532,17 +496,10 @@ object EventPipelines {
       checkpoint: String,
       cat: graft.catalog.VersionedCatalog,
       step: String,
-      retain: Option[Int] = None): Unit = {
-    val q = items.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        foldSketchEpoch(cat, step, countMinCells(batch, item), id, retain)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      retain: Option[Int] = None): Unit =
+    eachEpoch(items, checkpoint) { (batch, epoch) =>
+      foldSketchEpoch(cat, step, countMinCells(batch, item), epoch, retain)
+    }
 
   /** STREAMING index maintenance — the streaming twin of
     * [[graft.operators.SimilarityJoin.ivfAppendAssign]]: each epoch's
@@ -563,20 +520,13 @@ object EventPipelines {
       centroidsDf: DataFrame,
       checkpoint: String,
       cat: graft.catalog.VersionedCatalog,
-      step: String): Unit = {
-    val q = newVecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val asg = graft.operators.SimilarityJoin
-          .ivfAssignTable(batch, id, vec, centroidsDf)
-          .select(col("vec_id").cast("long"), col("cell"))
-        foldEpoch(cat, step, asg, epoch, (base, fresh) => base.unionByName(fresh))
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      step: String): Unit =
+    eachEpoch(newVecs, checkpoint) { (batch, epoch) =>
+      val asg = graft.operators.SimilarityJoin
+        .ivfAssignTable(batch, id, vec, centroidsDf)
+        .select(col("vec_id").cast("long"), col("cell"))
+      foldEpoch(cat, step, asg, epoch, (base, fresh) => base.unionByName(fresh))
+    }
 
   /** Streaming EXACT DEDUP at ingest — the streaming member of the
     * dedup family (batch = q40, incremental-vs-corpus = q80/q89; this
@@ -618,23 +568,16 @@ object EventPipelines {
       checkpoint: String,
       cat: graft.catalog.VersionedCatalog,
       step: String,
-      retain: Option[Int] = None): Unit = {
-    val q = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        foldEpoch(cat, s"${step}_bg",
-          graft.ext.LmScore.bigramCounts(batch), epoch,
-          graft.ext.LmScore.mergeBigramCounts, retain = retain)
-        foldEpoch(cat, s"${step}_vocab",
-          graft.ext.LmScore.vocabTokens(batch), epoch,
-          (base, fresh) => base.unionByName(fresh).distinct(),
-          retain = retain)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      retain: Option[Int] = None): Unit =
+    eachEpoch(docs, checkpoint) { (batch, epoch) =>
+      foldEpoch(cat, s"${step}_bg",
+        graft.ext.LmScore.bigramCounts(batch), epoch,
+        graft.ext.LmScore.mergeBigramCounts, retain = retain)
+      foldEpoch(cat, s"${step}_vocab",
+        graft.ext.LmScore.vocabTokens(batch), epoch,
+        (base, fresh) => base.unionByName(fresh).distinct(),
+        retain = retain)
+    }
 
   /** Streaming TOKENIZER state → catalog: the fifth member of the
     * sketch-sink family. Each epoch's documents reduce to a
@@ -652,19 +595,12 @@ object EventPipelines {
       checkpoint: String,
       cat: graft.catalog.VersionedCatalog,
       step: String,
-      retain: Option[Int] = None): Unit = {
-    val q = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        foldEpoch(cat, s"${step}_wc",
-          graft.ext.Bpe.wordCounts(batch), epoch,
-          graft.ext.Bpe.mergeWordCounts, retain = retain)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      retain: Option[Int] = None): Unit =
+    eachEpoch(docs, checkpoint) { (batch, epoch) =>
+      foldEpoch(cat, s"${step}_wc",
+        graft.ext.Bpe.wordCounts(batch), epoch,
+        graft.ext.Bpe.mergeWordCounts, retain = retain)
+    }
 
   /** Streaming LINE STATS → catalog: the sixth member of the
     * sketch-sink family. Each epoch's documents reduce to a per-line
@@ -682,20 +618,13 @@ object EventPipelines {
       checkpoint: String,
       cat: graft.catalog.VersionedCatalog,
       step: String,
-      retain: Option[Int] = None): Unit = {
-    val q = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        foldEpoch(cat, s"${step}_lines",
-          graft.ext.Boilerplate.lineStats(
-            graft.ext.Boilerplate.linesTokenWindows(batch)), epoch,
-          graft.ext.Boilerplate.mergeLineStats, retain = retain)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      retain: Option[Int] = None): Unit =
+    eachEpoch(docs, checkpoint) { (batch, epoch) =>
+      foldEpoch(cat, s"${step}_lines",
+        graft.ext.Boilerplate.lineStats(
+          graft.ext.Boilerplate.linesTokenWindows(batch)), epoch,
+        graft.ext.Boilerplate.mergeLineStats, retain = retain)
+    }
 
   /** Streaming DRIFT MONITOR → catalog: q179's count state maintained
     * by a stream. Each epoch's documents reduce to their (source,
@@ -714,20 +643,13 @@ object EventPipelines {
       checkpoint: String,
       cat: graft.catalog.VersionedCatalog,
       step: String,
-      retain: Option[Int] = None): Unit = {
-    val q = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        foldEpoch(cat, s"${step}_drift",
-          graft.ext.Curation.sourceBucketCounts(batch), epoch,
-          graft.ext.Curation.mergeSourceBucketCounts,
-          boundedState = true, retain = retain)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      retain: Option[Int] = None): Unit =
+    eachEpoch(docs, checkpoint) { (batch, epoch) =>
+      foldEpoch(cat, s"${step}_drift",
+        graft.ext.Curation.sourceBucketCounts(batch), epoch,
+        graft.ext.Curation.mergeSourceBucketCounts,
+        boundedState = true, retain = retain)
+    }
 
   /** Streaming RETRIEVAL INDEX → catalog: q169/q185's BM25 inverted
     * index maintained by a stream. Each epoch's documents contribute
@@ -751,43 +673,36 @@ object EventPipelines {
       cat: graft.catalog.VersionedCatalog,
       step: String,
       retain: Option[Int] = None,
-      positional: Boolean = false): Unit = {
-    val q = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val tk = graft.ext.Retrieval.bm25Tokenize(batch)
-          .localCheckpoint(eager = false) // 4 epoch tables read it
-        val postings = graft.ext.Retrieval.bm25Postings(tk)
-        // positional postings ride the same sink (the phrase/proximity
-        // index, q219/q220's layout): per-doc rows are disjoint across
-        // epochs, so UNION append is the whole maintenance story —
-        // streamed history is never re-tokenized and any version
-        // serves the adjacency-join phrase plan.
-        if (positional)
-          foldEpoch(cat, s"${step}_ppost",
-            graft.ext.PhraseSearch.positionalPostings(
-              tk.select(col("doc_id"), col("tk"))), epoch,
-            (a, b) => a.unionByName(b), retain = retain)
-        foldEpoch(cat, s"${step}_postings", postings, epoch,
+      positional: Boolean = false): Unit =
+    eachEpoch(docs, checkpoint) { (batch, epoch) =>
+      val tk = graft.ext.Retrieval.bm25Tokenize(batch)
+        .localCheckpoint(eager = false) // 4 epoch tables read it
+      val postings = graft.ext.Retrieval.bm25Postings(tk)
+      // positional postings ride the same sink (the phrase/proximity
+      // index, q219/q220's layout): per-doc rows are disjoint across
+      // epochs, so UNION append is the whole maintenance story —
+      // streamed history is never re-tokenized and any version
+      // serves the adjacency-join phrase plan.
+      if (positional)
+        foldEpoch(cat, s"${step}_ppost",
+          graft.ext.PhraseSearch.positionalPostings(
+            tk.select(col("doc_id"), col("tk"))), epoch,
           (a, b) => a.unionByName(b), retain = retain)
-        foldEpoch(cat, s"${step}_docstats",
-          tk.select(col("doc_id"), col("dl")), epoch,
-          (a, b) => a.unionByName(b), retain = retain)
-        foldEpoch(cat, s"${step}_terms",
-          postings.groupBy(col("term")).agg(count(lit(1)).as("df")), epoch,
-          (a, b) => a.unionByName(b).groupBy(col("term"))
-            .agg(sum(col("df")).as("df")), retain = retain)
-        foldEpoch(cat, s"${step}_stats",
-          tk.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot")), epoch,
-          (a, b) => a.unionByName(b)
-            .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot")).as("tot")),
-          boundedState = true, retain = retain)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      foldEpoch(cat, s"${step}_postings", postings, epoch,
+        (a, b) => a.unionByName(b), retain = retain)
+      foldEpoch(cat, s"${step}_docstats",
+        tk.select(col("doc_id"), col("dl")), epoch,
+        (a, b) => a.unionByName(b), retain = retain)
+      foldEpoch(cat, s"${step}_terms",
+        postings.groupBy(col("term")).agg(count(lit(1)).as("df")), epoch,
+        (a, b) => a.unionByName(b).groupBy(col("term"))
+          .agg(sum(col("df")).as("df")), retain = retain)
+      foldEpoch(cat, s"${step}_stats",
+        tk.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot")), epoch,
+        (a, b) => a.unionByName(b)
+          .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot")).as("tot")),
+        boundedState = true, retain = retain)
+    }
 
   /** Streaming WEIGHTED ORDER SAMPLE → catalog (q225's sampler as
     * maintained state): each epoch scores its batch with the shared
@@ -812,20 +727,14 @@ object EventPipelines {
       step: String,
       retain: Option[Int] = None): Unit = {
     val cols = Seq("source", "doc_id", "n_chars", "pri").map(col)
-    val q = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        foldEpoch(cat, s"${step}_sample",
-          graft.ext.Curation.orderSampleTopK(
-            graft.ext.Curation.orderSamplePriorities(batch)), epoch,
-          (a, b) => graft.ext.Curation.orderSampleTopK(
-            a.select(cols: _*).unionByName(b.select(cols: _*))),
-          boundedState = true, retain = retain)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    eachEpoch(docs, checkpoint) { (batch, epoch) =>
+      foldEpoch(cat, s"${step}_sample",
+        graft.ext.Curation.orderSampleTopK(
+          graft.ext.Curation.orderSamplePriorities(batch)), epoch,
+        (a, b) => graft.ext.Curation.orderSampleTopK(
+          a.select(cols: _*).unionByName(b.select(cols: _*))),
+        boundedState = true, retain = retain)
+    }
   }
 
   /** Streaming SEMANTIC DEDUP → catalog: the embedding-side member of
@@ -857,38 +766,31 @@ object EventPipelines {
       checkpoint: String,
       cat: graft.catalog.VersionedCatalog,
       step: String,
-      maxCell: Int = 65536): Unit = {
-    val q = vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val poolStep = s"${step}_pool"
-        val verdictStep = s"${step}_verdicts"
-        val asg = graft.operators.SimilarityJoin
-          .assignVectorsOnce(batch, id, vec, centroidsDf)
-          .persist()
-        if (!cat.maxEpochTag(verdictStep).exists(_ >= epoch)) {
-          val fresh = asg.withColumn("is_new", lit(true))
-          val assigned = cat.latestVersion(poolStep) match {
-            case Some(_) =>
-              cat.latest(poolStep).withColumn("is_new", lit(false))
-                .unionByName(fresh)
-            case None => fresh
-          }
-          cat.writeNext(verdictStep,
-            graft.operators.SimilarityJoin.semanticDedupIncrementalAssigned(
-              assigned, threshold, maxCell),
-            epochTag = Some(epoch))
+      maxCell: Int = 65536): Unit =
+    eachEpoch(vecs, checkpoint) { (batch, epoch) =>
+      val poolStep = s"${step}_pool"
+      val verdictStep = s"${step}_verdicts"
+      val asg = graft.operators.SimilarityJoin
+        .assignVectorsOnce(batch, id, vec, centroidsDf)
+        .persist()
+      if (!committed(cat, verdictStep, epoch)) {
+        val fresh = asg.withColumn("is_new", lit(true))
+        val assigned = cat.latestVersion(poolStep) match {
+          case Some(_) =>
+            cat.latest(poolStep).withColumn("is_new", lit(false))
+              .unionByName(fresh)
+          case None => fresh
         }
-        foldEpoch(cat, poolStep, asg, epoch,
-          (base, freshPool) => base.unionByName(freshPool))
-        asg.unpersist(blocking = false)
-        ()
+        cat.writeNext(verdictStep,
+          graft.operators.SimilarityJoin.semanticDedupIncrementalAssigned(
+            assigned, threshold, maxCell),
+          epochTag = Some(epoch))
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      foldEpoch(cat, poolStep, asg, epoch,
+        (base, freshPool) => base.unionByName(freshPool))
+      asg.unpersist(blocking = false)
+      ()
+    }
 
   /** Streaming DEDUP BAND INDEX → catalog: q170's index-as-data pair
     * maintained by a stream. Each epoch's documents contribute their
@@ -908,26 +810,19 @@ object EventPipelines {
       docs: DataFrame,
       checkpoint: String,
       cat: graft.catalog.VersionedCatalog,
-      step: String): Unit = {
-    val q = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val (base, banded) = graft.operators.NearDup.minhashBandTable(
-          batch, col("doc_id"), col("text"))
-        foldEpoch(cat, s"${step}_bands",
-          banded.select(col("band"), col("bsig"), col("doc_id")), epoch,
-          (b, f) => b.unionByName(f))
-        foldEpoch(cat, s"${step}_shingles",
-          base.select(col("doc_id"),
-            array_distinct(transform(col("sh"),
-              sh => graft.ext.TextDsl.hp(sh))).as("hsh")), epoch,
-          (b, f) => b.unionByName(f))
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      step: String): Unit =
+    eachEpoch(docs, checkpoint) { (batch, epoch) =>
+      val (base, banded) = graft.operators.NearDup.minhashBandTable(
+        batch, col("doc_id"), col("text"))
+      foldEpoch(cat, s"${step}_bands",
+        banded.select(col("band"), col("bsig"), col("doc_id")), epoch,
+        (b, f) => b.unionByName(f))
+      foldEpoch(cat, s"${step}_shingles",
+        base.select(col("doc_id"),
+          array_distinct(transform(col("sh"),
+            sh => graft.ext.TextDsl.hp(sh))).as("hsh")), epoch,
+        (b, f) => b.unionByName(f))
+    }
 
   /** STREAMING CLUSTER MAINTENANCE — q217/q218's contraction merge as a
     * catalog sink: each epoch appends its band + hashed-shingle rows
@@ -954,17 +849,10 @@ object EventPipelines {
       docs: DataFrame,
       checkpoint: String,
       cat: graft.catalog.VersionedCatalog,
-      step: String): Unit = {
-    val q = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        foldClusterEpoch(cat, step, batch, epoch)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      step: String): Unit =
+    eachEpoch(docs, checkpoint) { (batch, epoch) =>
+      foldClusterEpoch(cat, step, batch, epoch)
+    }
 
   private[streaming] def foldClusterEpoch(
       cat: graft.catalog.VersionedCatalog, step: String,
@@ -984,7 +872,7 @@ object EventPipelines {
         array_distinct(transform(col("sh"),
           sh => graft.ext.TextDsl.hp(sh))).as("hsh")))
       val clStep = s"${step}_clusters"
-      if (!cat.maxEpochTag(clStep).exists(_ >= epoch)) {
+      if (!committed(cat, clStep, epoch)) {
         // delta edges: batch × (persisted corpus ∪ batch) — the q170
         // probe join, verified by exact Jaccard over the hashed
         // shingle sets (both sides' arrays come from the same store,
@@ -1017,7 +905,6 @@ object EventPipelines {
             .select(col("node"), col("label"))
         }
         cat.writeNext(clStep, next, epochTag = Some(epoch))
-        ()
       }
       // serving-state appends commit AFTER the fold (ordering note above)
       foldEpoch(cat, s"${step}_bands", bandRows, epoch,
@@ -1044,22 +931,15 @@ object EventPipelines {
       vectors: DataFrame,
       checkpoint: String,
       cat: graft.catalog.VersionedCatalog,
-      step: String): Unit = {
-    val q = vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val scaledB = graft.ext.Similarity.annScaled(batch)
-        foldEpoch(cat, s"${step}_index",
-          graft.ext.Similarity.annIndexRows(scaledB), epoch,
-          (b, f) => b.unionByName(f))
-        foldEpoch(cat, s"${step}_vectors", scaledB, epoch,
-          (b, f) => b.unionByName(f))
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      step: String): Unit =
+    eachEpoch(vectors, checkpoint) { (batch, epoch) =>
+      val scaledB = graft.ext.Similarity.annScaled(batch)
+      foldEpoch(cat, s"${step}_index",
+        graft.ext.Similarity.annIndexRows(scaledB), epoch,
+        (b, f) => b.unionByName(f))
+      foldEpoch(cat, s"${step}_vectors", scaledB, epoch,
+        (b, f) => b.unionByName(f))
+    }
 
   /** Streaming CLASSIFIER → catalog: the first NON-FOLDABLE member of
     * the catalog-sink family — perceptron weights don't merge, they
@@ -1087,28 +967,17 @@ object EventPipelines {
       checkpoint: String,
       cat: graft.catalog.VersionedCatalog,
       step: String,
-      epochsPerBatch: Int = 5): Unit = {
-    val q = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        trainClassifierEpoch(cat, step, batch, epoch, epochsPerBatch)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      epochsPerBatch: Int = 5): Unit =
+    eachEpoch(docs, checkpoint) { (batch, epoch) =>
+      trainClassifierEpoch(cat, step, batch, epoch, epochsPerBatch)
+    }
 
   private[streaming] def trainClassifierEpoch(
       cat: graft.catalog.VersionedCatalog, step: String,
       batch: DataFrame, epoch: Long, epochsPerBatch: Int): Unit = {
     import graft.ext.Classifier
     val wStep = s"${step}_w"
-    if (cat.maxEpochTag(wStep).exists(_ >= epoch)) return
-    def writeOnce(s0: String, df: => DataFrame): Unit =
-      if (!cat.maxEpochTag(s0).exists(_ >= epoch)) {
-        cat.writeNext(s0, df, epochTag = Some(epoch)); ()
-      }
+    if (committed(cat, wStep, epoch)) return
     val T_ = org.apache.spark.sql.types.StructType.fromDDL _
     val thrSchema = T_(Classifier.ThrSchemaDdl)
     val statsSchema = T_(Classifier.StatsSchemaDdl)
@@ -1125,14 +994,18 @@ object EventPipelines {
         // the epoch entirely and retry bootstrap on the next one.
         if (tk.isEmpty) return
         val scored = scope.cache(Classifier.scoredCb(tk))
-        writeOnce(s"${step}_thr", Classifier.labelThresholds(scored))
+        if (!committed(cat, s"${step}_thr", epoch))
+          cat.writeNext(s"${step}_thr", Classifier.labelThresholds(scored),
+            epochTag = Some(epoch))
         val raw = scope.cache(Classifier.rawFeaturesUnder(tk, scored,
           cat.read(s"${step}_thr", 1, Some(thrSchema))))
-        writeOnce(s"${step}_stats", Classifier.featureStats(raw))
+        if (!committed(cat, s"${step}_stats", epoch))
+          cat.writeNext(s"${step}_stats", Classifier.featureStats(raw),
+            epochTag = Some(epoch))
         val feat = scope.cache(Classifier.standardizeUnder(raw,
           cat.read(s"${step}_stats", 1, Some(statsSchema))).coalesce(4))
-        writeOnce(wStep, Classifier.weightsDf(spark,
-          Classifier.trainPerceptron(feat, epochsPerBatch)))
+        cat.writeNext(wStep, Classifier.weightsDf(spark,
+          Classifier.trainPerceptron(feat, epochsPerBatch)), epochTag = Some(epoch))
       } else {
         // continuation: features under the FROZEN v1 artifact,
         // warm-started from the newest weights
@@ -1142,8 +1015,9 @@ object EventPipelines {
         val feat = scope.cache(Classifier.standardizeUnder(raw,
           cat.read(s"${step}_stats", 1, Some(statsSchema))).coalesce(4))
         val init = Classifier.lastWeights(cat.latest(wStep, Some(wSchema)))
-        writeOnce(wStep, Classifier.weightsDf(spark,
-          Classifier.trainPerceptronFrom(feat, epochsPerBatch, init)))
+        cat.writeNext(wStep, Classifier.weightsDf(spark,
+          Classifier.trainPerceptronFrom(feat, epochsPerBatch, init)),
+          epochTag = Some(epoch))
       }
     } finally scope.release()
   }
@@ -1171,28 +1045,17 @@ object EventPipelines {
       checkpoint: String,
       cat: graft.catalog.VersionedCatalog,
       step: String,
-      epochsPerBatch: Int = graft.ext.HashedClassifier.Epochs): Unit = {
-    val q = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        trainHashedEpoch(cat, step, batch, epoch, epochsPerBatch)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      epochsPerBatch: Int = graft.ext.HashedClassifier.Epochs): Unit =
+    eachEpoch(docs, checkpoint) { (batch, epoch) =>
+      trainHashedEpoch(cat, step, batch, epoch, epochsPerBatch)
+    }
 
   private[streaming] def trainHashedEpoch(
       cat: graft.catalog.VersionedCatalog, step: String,
       batch: DataFrame, epoch: Long, epochsPerBatch: Int): Unit = {
     import graft.ext.{Classifier, HashedClassifier => H}
     val wStep = s"${step}_w"
-    if (cat.maxEpochTag(wStep).exists(_ >= epoch)) return
-    def writeOnce(s0: String, df: => DataFrame): Unit =
-      if (!cat.maxEpochTag(s0).exists(_ >= epoch)) {
-        cat.writeNext(s0, df, epochTag = Some(epoch)); ()
-      }
+    if (committed(cat, wStep, epoch)) return
     val T_ = org.apache.spark.sql.types.StructType.fromDDL _
     val thrSchema = T_(H.ThrSchemaDdl)
     val wSchema = T_(H.WSchemaDdl)
@@ -1205,14 +1068,15 @@ object EventPipelines {
         // empty tk3 universe would freeze NULL thresholds forever
         if (tk.isEmpty) return
         val hq = scope.cache(H.qualityE4(tk))
-        writeOnce(s"${step}_thr", H.qThresholds(hq))
+        if (!committed(cat, s"${step}_thr", epoch))
+          cat.writeNext(s"${step}_thr", H.qThresholds(hq), epochTag = Some(epoch))
         val lab = scope.cache(H.labelsUnder(hq,
           cat.read(s"${step}_thr", 1, Some(thrSchema))).coalesce(4))
         val occ = scope.cache(H.hashedOcc(tk).coalesce(8))
-        writeOnce(wStep, H.trainTransientFrom(spark, occ, lab,
+        cat.writeNext(wStep, H.trainTransientFrom(spark, occ, lab,
           spark.createDataFrame(
             java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            wSchema), epochsPerBatch))
+            wSchema), epochsPerBatch), epochTag = Some(epoch))
       } else {
         // continuation: labels under the FROZEN v1 thresholds,
         // warm-started from the newest committed weight TABLE
@@ -1220,8 +1084,8 @@ object EventPipelines {
         val lab = scope.cache(H.labelsUnder(hq,
           cat.read(s"${step}_thr", 1, Some(thrSchema))).coalesce(4))
         val occ = scope.cache(H.hashedOcc(tk).coalesce(8))
-        writeOnce(wStep, H.trainTransientFrom(spark, occ, lab,
-          cat.latest(wStep, Some(wSchema)), epochsPerBatch))
+        cat.writeNext(wStep, H.trainTransientFrom(spark, occ, lab,
+          cat.latest(wStep, Some(wSchema)), epochsPerBatch), epochTag = Some(epoch))
       }
     } finally scope.release()
   }

@@ -444,7 +444,7 @@ class VersionedCatalogSpec extends SparkSpec {
       // the tag must ride the rewrite: dropping it would reopen the
       // streaming sketch sinks' replay window (EventPipelines.foldEpoch)
       assert(cat.versionEpochTag("t", v) == Some(7L))
-      assert(cat.latestEpochTag("t") == Some(7L))
+      assert(cat.latestVersion("t").contains(v))
     }
   }
 
@@ -452,8 +452,8 @@ class VersionedCatalogSpec extends SparkSpec {
     withTempDir { dir =>
       val cat = new VersionedCatalog(spark, dir.toString)
       cat.writeNext("t", df(1), epochTag = Some(3L))
-      cat.writeNext("t", df(2)) // untagged republish hides the latest-only probe
-      assert(cat.latestEpochTag("t").isEmpty)
+      cat.writeNext("t", df(2)) // untagged republish: the latest version has no tag
+      assert(cat.versionEpochTag("t", 2).isEmpty)
       assert(cat.maxEpochTag("t") == Some(3L))
     }
   }

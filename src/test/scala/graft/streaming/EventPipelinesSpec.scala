@@ -362,7 +362,7 @@ class EventPipelinesSpec extends SparkSpec {
         Seq("a", "b", "a").toDF("t"), col("t"))
       EventPipelines.foldSketchEpoch(cat, "cms", cells1, epoch = 0L)
       assert(cat.latestVersion("cms").contains(1))
-      assert(cat.latestEpochTag("cms").contains(0L))
+      assert(cat.versionEpochTag("cms", 1).contains(0L))
       val v1 = toMap(cat.latest("cms"))
       // the crash-replay window the old sidecar marker left open: the
       // version committed but the stream replays the same epoch — the
@@ -376,7 +376,7 @@ class EventPipelinesSpec extends SparkSpec {
       EventPipelines.foldSketchEpoch(cat, "cms",
         EventPipelines.countMinCells(Seq("b").toDF("t"), col("t")), epoch = 1L)
       assert(cat.latestVersion("cms").contains(2))
-      assert(cat.latestEpochTag("cms").contains(1L))
+      assert(cat.versionEpochTag("cms", 2).contains(1L))
       // compaction interleaved between a fold and the stream's
       // checkpoint commit: the rewritten version CARRIES the epoch tag
       // (VersionedCatalog.compact), so a replay of the just-folded
@@ -384,7 +384,7 @@ class EventPipelinesSpec extends SparkSpec {
       // untagged latest version and double-add
       cat.compact("cms")
       assert(cat.latestVersion("cms").contains(3))
-      assert(cat.latestEpochTag("cms").contains(1L), "compaction dropped the epoch tag")
+      assert(cat.versionEpochTag("cms", 3).contains(1L), "compaction dropped the epoch tag")
       val v3 = toMap(cat.latest("cms"))
       EventPipelines.foldSketchEpoch(cat, "cms",
         EventPipelines.countMinCells(Seq("b").toDF("t"), col("t")), epoch = 1L)
@@ -954,13 +954,33 @@ class EventPipelinesSpec extends SparkSpec {
       val all = (1 to 3).flatMap(v =>
         cat.read("events", v, Some(schema)).collect().map(_.getLong(0)))
       assert(all.sorted == Seq(1L, 2L, 3L, 4L, 5L))
+      def ids(v: Int) = cat.read("events", v, Some(schema))
+        .collect().map(_.getLong(0)).sorted.toSeq
+
+      // a compaction between runs leaves a gap between the epoch count
+      // and the version count: the next epoch must still commit
+      assert(cat.compact("events", Some(schema)) == 4)
+      writeInput("d.json", Seq(6, 7))
+      EventPipelines.runCatalogSink(stream, ckpt, cat, "events")
+      assert(cat.versions("events") == Seq(1, 2, 3, 4, 5))
+      assert(ids(5) == Seq(6L, 7L))
+
+      // a claim orphaned by a writer that crashed between claim and
+      // rename: the epoch commits past it, and so does the next one
+      val fs = new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.create(new org.apache.hadoop.fs.Path(s"$root/events/.claims/v=6"), false).close()
+      writeInput("e.json", Seq(8))
+      EventPipelines.runCatalogSink(stream, ckpt, cat, "events")
+      writeInput("f.json", Seq(9))
+      EventPipelines.runCatalogSink(stream, ckpt, cat, "events")
+      assert(cat.versions("events") == Seq(1, 2, 3, 4, 5, 7, 8))
+      assert(ids(7) == Seq(8L) && ids(8) == Seq(9L))
 
       // catalog behind the checkpoint (root wiped): fail fast, never
       // silently drop epochs
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/events"), true)
-      writeInput("d.json", Seq(6))
+      writeInput("g.json", Seq(10))
       val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         EventPipelines.runCatalogSink(stream, ckpt, cat, "events")
       }
@@ -995,24 +1015,19 @@ class EventPipelinesSpec extends SparkSpec {
       assert(state() == Seq(1L -> "a", 2L -> "B2", 3L -> "c"))
       val versionsAfter = cat.versions("dim")
 
-      // idle rerun: epoch markers + offset log → nothing recommitted
+      // idle rerun: epoch tags + offset log → nothing recommitted
       EventPipelines.runCatalogMergeSink(stream, ckpt, cat, "dim", Seq("k"), schema)
       assert(cat.versions("dim") == versionsAfter)
       assert(state() == Seq(1L -> "a", 2L -> "B2", 3L -> "c"))
 
-      // crash between merge commit and epoch marker: replay the epoch.
-      // The documented contract is CONTENT idempotence at the cost of
-      // at most one redundant version — assert exactly that, no more
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/dim/.epochs/e=1"), false)
+      // crash between merge commit and offset commit: the epoch
+      // replays, finds its tag on the committed version and skips
       val ckpt2 = s"$dir/ckpt-crashed"
       cloneCheckpointWithoutCommit(ckpt, ckpt2, 1L)
       EventPipelines.runCatalogMergeSink(stream, ckpt2, cat, "dim", Seq("k"), schema)
       assert(state() == Seq(1L -> "a", 2L -> "B2", 3L -> "c"),
-        "replayed merge must be content-idempotent")
-      assert(cat.versions("dim") == versionsAfter :+ (versionsAfter.max + 1),
-        "replay costs exactly one redundant version")
+        "replayed merge must leave the state unchanged")
+      assert(cat.versions("dim") == versionsAfter, "replay must add no version")
     }
   }
 
